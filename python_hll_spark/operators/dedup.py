@@ -2,10 +2,10 @@
 n-gram/word-set Jaccard (the oracle the approximate paths are tested against).
 
 Scale shape: exact dedup is a hash-groupBy on a 64-bit JVM-side fingerprint
-(shuffles 8-byte keys, never text).  MinHash/SimHash signatures are computed
-in one mapInPandas pass over JVM-prehashed shingles; LSH banding turns the
-quadratic pair search into an equi-join on (band, band_key) buckets, which
-Catalyst shuffles like any other join key.
+(shuffles 8-byte keys, never text).  MinHash/SimHash signatures come from
+one Arrow tokenizer pass (``tokenize_word_hashes``) feeding numpy kernels;
+LSH banding turns the quadratic pair search into an equi-join on (band,
+band_key) buckets, which Catalyst shuffles like any other join key.
 """
 
 from __future__ import annotations
@@ -101,21 +101,6 @@ def fan_out_small_input(df: DataFrame, min_partitions: int | None = None) -> Dat
     return df
 
 
-# --------------------------------------------------------------- shingles
-def with_shingle_hashes(df: DataFrame, text_col: str = "text", n: int = 3,
-                        id_col: str = "doc_id") -> DataFrame:
-    """(id, shingles array<bigint>): xxhash64 of word n-grams, JVM-side."""
-    df = fan_out_small_input(df)
-    words = F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
-    if n == 1:
-        sh = F.transform(words, lambda w: F.xxhash64(w))
-    else:
-        idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
-        sh = F.transform(idx, lambda i: F.xxhash64(
-            F.concat_ws(" ", F.slice(words, i + 1, n))))
-    return df.select(F.col(id_col), F.array_distinct(sh).alias("shingles"))
-
-
 # ------------------------------------------------------------- tokenizer
 def tokenize_word_hashes(df: DataFrame, text_col: str = "text",
                          id_col: str = "doc_id") -> DataFrame:
@@ -156,71 +141,17 @@ def tokenize_word_hashes(df: DataFrame, text_col: str = "text",
 
 # ---------------------------------------------------------------- MinHash
 def minhash_signatures(df: DataFrame, text_col: str = "text", n: int = 3,
-                       num_hashes: int = 128, id_col: str = "doc_id",
-                       tokenizer: str = "arrow") -> DataFrame:
-    """(id, sig array<bigint>): K permutation-minima over shingle hashes.
+                       num_hashes: int = 128, id_col: str = "doc_id") -> DataFrame:
+    """(id, sig array<bigint>): K permutation-minima over word n-gram hashes.
 
-    Arrow-native: shingle lists flatten zero-copy; per-doc minima come from
-    ``np.minimum.reduceat`` segment reductions — one vector hash pass per
-    permutation across the whole batch, no per-row Python.  The permutation
-    family is 2-universal multiply-add ``h_k(x) = A_k*x + B_k (mod 2^64)``
-    with odd ``A_k`` (a bijection): the shingle hashes are already
-    splitmix64-mixed, so one multiply+add per permutation replaces a full
-    6-op finalizer pass — 3x less work in the 128-pass hot loop.
-
-    ``tokenizer="arrow"`` (default) tokenizes+hashes words in one Arrow
-    pass (``tokenize_word_hashes``) and reuses the pre-tokenized chain
-    kernel — no interpreted JVM shingle expressions anywhere on the hot
-    path.  ``tokenizer="jvm"`` keeps the original xxhash64 higher-order
-    expression pipeline (different hash family, hence different — equally
-    valid — signatures; exact-duplicate texts collapse under both)."""
-    import pyarrow as pa
-
-    if tokenizer == "arrow":
-        return minhash_signatures_tokens(
-            tokenize_word_hashes(df, text_col, id_col), "tokens",
-            n, num_hashes, id_col)
-    shingled = with_shingle_hashes(df, text_col, n, id_col)
-    ks = np.arange(1, num_hashes + 1, dtype=np.int64)
-    A = splitmix64(ks, seed=0xA5).view(np.uint64) | np.uint64(1)
-    B = splitmix64(ks, seed=0xB7).view(np.uint64)
-
-    def compute(batches):
-        for batch in batches:
-            sh = batch.column("shingles")
-            if isinstance(sh, pa.ChunkedArray):
-                sh = sh.combine_chunks()
-            flat = sh.flatten().to_numpy(zero_copy_only=False) \
-                .astype(np.int64, copy=False)
-            all_offsets = sh.offsets.to_numpy(zero_copy_only=False)
-            lengths = np.diff(all_offsets)
-            nonempty = lengths > 0
-            base = all_offsets[0]
-            offsets = (all_offsets[:-1][nonempty] - base).astype(np.int64)
-            n_docs = len(lengths)
-            sig_mat = np.full((n_docs, num_hashes), np.iinfo(np.int64).max,
-                              dtype=np.int64)
-            flat_u = flat.view(np.uint64)
-            buf = np.empty_like(flat_u)
-            for k in range(num_hashes):
-                if len(flat):
-                    np.multiply(flat_u, A[k], out=buf)
-                    buf += B[k]
-                    mins = np.minimum.reduceat(buf, offsets)
-                    sig_mat[nonempty, k] = mins.astype(np.int64)
-            ids = batch.column(id_col)
-            if isinstance(ids, pa.ChunkedArray):
-                ids = ids.combine_chunks()
-            sig_offsets = pa.array(
-                np.arange(0, (n_docs + 1) * num_hashes, num_hashes,
-                          dtype=np.int32))
-            sig_arr = pa.ListArray.from_arrays(sig_offsets,
-                                               pa.array(sig_mat.ravel()))
-            yield pa.RecordBatch.from_arrays(
-                [ids, sig_arr], names=[id_col, "sig"])
-
-    id_type = dict(df.dtypes)[id_col]
-    return shingled.mapInArrow(compute, schema=f"`{id_col}` {id_type}, sig array<bigint>")
+    Text is tokenized and word-hashed in one Arrow pass
+    (``tokenize_word_hashes``) and the signatures come from the
+    pre-tokenized kernel (``minhash_signatures_tokens``) — no interpreted
+    JVM shingle expressions anywhere on the hot path.  Texts that
+    normalize to the same word sequence get identical signatures."""
+    return minhash_signatures_tokens(
+        tokenize_word_hashes(df, text_col, id_col), "tokens",
+        n, num_hashes, id_col)
 
 
 _EMPTY_SIG_SENTINEL = np.iinfo(np.int64).max
@@ -233,9 +164,12 @@ def minhash_signatures_tokens(df: DataFrame, tokens_col: str = "tokens",
     table shape) — no text, no JVM shingle expressions: ONE mapInArrow
     stage computes token n-gram hashes (vectorized chain over the chunk's
     flat token buffer with per-doc window masks) and the per-permutation
-    minima in the same pass.  Mirrors the text path's semantics: docs with
-    m >= n tokens get m-n+1 shingles; 0 < m < n gets one shingle over all
-    m tokens; empty docs keep the sentinel signature (dropped at banding).
+    minima in the same pass.  Docs with m >= n tokens get m-n+1 shingles;
+    0 < m < n gets one shingle over all m tokens; empty docs keep the
+    sentinel signature (dropped at banding).  The permutation family is
+    2-universal multiply-add ``h_k(x) = A_k*x + B_k (mod 2^64)`` with odd
+    ``A_k`` (a bijection): the n-gram hashes are already splitmix64-mixed,
+    so one multiply+add per permutation replaces a full finalizer pass.
 
     Output is join-compatible with ``lsh_candidate_pairs`` /
     ``connected_components`` — the rest of the dedup pipeline is shared."""
@@ -543,8 +477,7 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
     Signatures are read 3x downstream (banding + both join sides) and are
     tiny (n_docs x num_hashes int64), so they're persisted rather than
     recomputing the shingle+minhash pipeline per consumer.  Pass ``sigs``
-    (a persisted ``minhash_signatures`` frame) to own the cache lifecycle —
-    ``near_dedup`` does, and unpersists once components are resolved.
+    (a persisted ``minhash_signatures`` frame) to own the cache lifecycle.
     Internal persisted frames are appended to ``cache_out`` when given."""
     if sigs is None:
         sigs = minhash_signatures(df, text_col, n, num_hashes, id_col).persist()
@@ -557,36 +490,24 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
 
 # ---------------------------------------------------------------- SimHash
 def simhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       tokenizer: str = "arrow") -> DataFrame:
+                       id_col: str = "doc_id") -> DataFrame:
     """(id, simhash bigint): 64-bit sign-sum fingerprint over word hashes.
 
-    Arrow-native, no per-row Python: word-hash lists flatten zero-copy,
+    Arrow-native, no per-row Python: the per-word hashes come from the
+    shared ``tokenize_word_hashes`` pass and flatten zero-copy,
     ``np.unpackbits`` over the little-endian byte view yields the (words,
     64) bit matrix for a whole chunk at once, and ``np.add.reduceat`` at
     doc boundaries gives per-doc bit-vote sums; signatures re-assemble with
     ``np.packbits``.  Chunked at doc boundaries so the bit matrix stays
-    ~8 MB regardless of batch size.
-
-    ``tokenizer="arrow"`` (default) sources the per-word hashes from the
-    shared ``tokenize_word_hashes`` Arrow pass; ``tokenizer="jvm"`` keeps
-    the original interpreted xxhash64 higher-order expression (different
-    hash family -> different, equally valid signatures)."""
-    if tokenizer == "arrow":
-        hashed = tokenize_word_hashes(df, text_col, id_col) \
-            .withColumnRenamed("tokens", "wh")
-    else:
-        df = fan_out_small_input(df)
-        words = F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
-        hashed = df.select(F.col(id_col),
-                           F.transform(words, lambda w: F.xxhash64(w)).alias("wh"))
+    ~8 MB regardless of batch size."""
+    hashed = tokenize_word_hashes(df, text_col, id_col)
 
     CHUNK_WORDS = 131072  # 64-wide uint8 bit matrix ~8MB per chunk
 
     def compute(batches):
         import pyarrow as pa
         for batch in batches:
-            wh = batch.column("wh")
+            wh = batch.column("tokens")
             if isinstance(wh, pa.ChunkedArray):
                 wh = wh.combine_chunks()
             n = len(wh)
@@ -688,18 +609,26 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text", max_hamming: int =
 
 
 # ------------------------------------------ duplicate-cluster resolution
-def _cc_star(edges: DataFrame, max_iter: int, on_nonconverged: str,
-             chk) -> DataFrame:
+def _cc_star(edges: DataFrame, max_iter: int) -> DataFrame:
     """Large-star/small-star alternation (Kiveris et al., 'Connected
-    Components in MapReduce and Beyond'): converges in O(log d) rounds vs
-    min-label's O(d), so adversarially long duplicate chains cannot stall
-    the job.  Both operations preserve connectivity; at the fixed point
-    the edge set is a star forest around each component's minimum.
+    Components in MapReduce and Beyond'): converges in O(log d) rounds, so
+    long duplicate chains cannot stall the job.  Both operations preserve
+    connectivity; at the fixed point the edge set is a star forest around
+    each component's minimum.
 
     Edges are kept canonical big->small.  Convergence = (count,
-    hash-checksum) of the edge set unchanged across one small-star round —
-    one tiny action per phase."""
-    import warnings
+    hash-checksum) of the edge set unchanged across one round — one tiny
+    action per round.  Every round checkpoints: RELIABLY when
+    ``sc.setCheckpointDir`` is set (plans.session.get_spark does), so a
+    multi-hour run survives executor loss, else ``localCheckpoint``
+    (executor-storage lineage, fine for test scale).  Raises
+    ``RuntimeError`` if the edge set still changes after ``max_iter``
+    rounds: labels that are not converged are never returned."""
+    reliable = edges.sparkSession.sparkContext.getCheckpointDir() is not None
+
+    def chk(df: DataFrame) -> DataFrame:
+        return df.checkpoint(eager=True) if reliable \
+            else df.localCheckpoint(eager=True)
 
     nodes = chk(edges.select(F.col("id_a").alias("node"))
                 .unionByName(edges.select(F.col("id_b").alias("node")))
@@ -715,7 +644,6 @@ def _cc_star(edges: DataFrame, max_iter: int, on_nonconverged: str,
         return (row["n"], row["h"])
 
     prev = sig(E)
-    converged = False
     for _ in range(max_iter):
         # large-star: every neighbor bigger than `node` connects to the
         # minimum of node's closed neighborhood
@@ -741,16 +669,12 @@ def _cc_star(edges: DataFrame, max_iter: int, on_nonconverged: str,
                 .where(F.col("u") != F.col("v")).distinct())
         cur = sig(E)
         if cur == prev:
-            converged = True
             break
         prev = cur
-    if not converged and max_iter > 0:
-        msg = (f"connected_components(method='star') did not converge in "
-               f"{max_iter} rounds; increase max_iter")
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        if on_nonconverged == "warn":
-            warnings.warn(msg, RuntimeWarning, stacklevel=3)
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds; "
+            "increase max_iter")
     comp = E.groupBy("u").agg(F.min("v").alias("component")) \
         .select(F.col("u").alias("node"), "component")
     return (nodes.join(comp, "node", "left")
@@ -761,8 +685,8 @@ def _cc_star(edges: DataFrame, max_iter: int, on_nonconverged: str,
 def _cc_driver_union_find(spark, edge_rows, id_type) -> DataFrame:
     """Components of a bounded, already-collected edge list: path-compressed
     union-find on the driver, each node labeled with its component's min
-    member id — the exact contract of the distributed paths (and checked
-    against them in tests), in one createDataFrame instead of an iteration
+    member id — the exact contract of the distributed path (and checked
+    against it in tests), in one createDataFrame instead of an iteration
     loop of checkpoint+collect actions."""
     from pyspark.sql.types import StructField, StructType
 
@@ -797,99 +721,47 @@ def _cc_driver_union_find(spark, edge_rows, id_type) -> DataFrame:
 
 
 def connected_components(edges: DataFrame, max_iter: int = 20,
-                         on_nonconverged: str = "warn",
-                         method: str = "minlabel",
                          small_cap: int | None = 1 << 20) -> DataFrame:
-    """Connected components of an undirected (id_a, id_b) edge list via
-    iterative min-label propagation — pure DataFrame joins, so Catalyst/AQE
-    handle the shuffles and it scales with the cluster (no driver graphs).
-
+    """Connected components of an undirected (id_a, id_b) edge list.
     Returns (id, component) where component is the min member id.
-    Converges in O(diameter) iterations; duplicate clusters are tiny, so
-    a handful of iterations suffice.
 
     Small-graph fast path: duplicate-cluster edge lists are normally tiny
     relative to the corpus (pairs survive a Jaccard/cosine threshold), so
     when the edge count is <= ``small_cap`` (default 2^20 ~ 16 MB of id
     pairs on the driver) the components are solved with ONE bounded
-    CollectLimit action and a driver-side union-find, replacing the
-    2-actions-per-iteration distributed loop.  Above the cap the probe is
-    discarded and the distributed path runs — at that scale the one
-    bounded collect is noise next to the iterations it tried to save.
-    Results are identical (component = min member id).  Pass
+    CollectLimit action and a driver-side union-find.  Above the cap the
+    probe is discarded and the one distributed algorithm runs:
+    large-star/small-star (``_cc_star``), pure DataFrame joins that
+    Catalyst/AQE shuffle, converging in O(log diameter) rounds of
+    ``max_iter``.  Both paths give the same labels.  Pass
     ``small_cap=None`` to force the distributed path (the convergence /
     checkpoint tests do).
 
-    100 TB shape: each distributed iteration is ONE action — the
-    changed-label flag is computed inside the update projection and summed
-    over the checkpointed result, instead of re-joining old and new labels
-    (which doubled the per-iteration work).  Checkpoints are RELIABLE
-    (``sc.setCheckpointDir``, set by plans.session.get_spark) so a
-    multi-hour run survives executor loss; if no checkpoint dir is
-    configured the code falls back to ``localCheckpoint``
-    (executor-storage lineage, fine for test scale).
-    ``on_nonconverged``: "warn" (default), "raise", or "ignore" when labels
-    are still changing after max_iter.
-
-    ``method="star"`` switches to large-star/small-star alternation
-    (O(log d) rounds) — the right choice when components may be deep
-    chains; the default min-label is one join cheaper per round and
-    duplicate clusters are normally shallow."""
-    import warnings
-
-    if method not in ("minlabel", "star"):
-        raise ValueError(f"unknown method {method!r}; use 'minlabel' or 'star'")
-
+    Non-convergence is an error: if the distributed edge set still changes
+    after ``max_iter`` rounds this raises ``RuntimeError``, so the
+    ``id != component`` keep rule never sees labels that are not
+    converged."""
     if small_cap:
         head = edges.select("id_a", "id_b").limit(small_cap + 1).collect()
         if len(head) <= small_cap:
             return _cc_driver_union_find(edges.sparkSession, head,
                                          edges.schema["id_a"].dataType)
+    return _cc_star(edges, max_iter)
 
-    sc = edges.sparkSession.sparkContext
-    reliable = sc.getCheckpointDir() is not None
 
-    def chk(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if reliable \
-            else df.localCheckpoint(eager=True)
-
-    if method == "star":
-        return _cc_star(edges, max_iter, on_nonconverged, chk)
-
-    both = chk(edges.select(F.col("id_a").alias("node"), F.col("id_b").alias("nbr"))
-               .unionByName(edges.select(F.col("id_b").alias("node"),
-                                         F.col("id_a").alias("nbr"))))
-    labels = chk(both.select("node").distinct()
-                 .withColumn("component", F.col("node")))
-    changed = None
-    for _ in range(max_iter):
-        nbr_labels = labels.select(F.col("node").alias("nbr"),
-                                   F.col("component").alias("nbr_component"))
-        neighbor_min = (both.join(nbr_labels, "nbr")
-                        .groupBy("node")
-                        .agg(F.min("nbr_component").alias("nbr_min")))
-        updated = chk(
-            labels.join(neighbor_min, "node", "left")
-            .select("node",
-                    F.least(F.col("component"),
-                            F.coalesce(F.col("nbr_min"), F.col("component")))
-                    .alias("component"),
-                    (F.coalesce(F.col("nbr_min"), F.col("component"))
-                     < F.col("component")).cast("long").alias("__changed")))
-        changed = updated.agg(F.sum("__changed")).collect()[0][0] or 0
-        labels = updated.drop("__changed")
-        if changed == 0:
-            break
-    if changed:
-        msg = (f"connected_components did not converge in {max_iter} "
-               f"iterations ({changed} labels still changing); increase "
-               "max_iter — components wider than max_iter hops keep "
-               "multiple labels")
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        if on_nonconverged == "warn":
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return labels.select(F.col("node").alias("id"), "component")
+def _keep_representatives(pairs: DataFrame, id_col: str,
+                          *frames: DataFrame) -> list[DataFrame]:
+    """The keep rule of every near-dup REMOVAL operator: connected
+    components over the ``(id_a, id_b)`` duplicate edges (eager — it
+    materializes the edge list), then each of ``frames`` loses every id
+    that is not its component's min member.  ``component`` IS the min
+    member id (the ``connected_components`` contract, which raises rather
+    than return labels that are not converged), so the rule is a filter
+    plus one ``left_anti`` join per frame, not an agg + join."""
+    comps = connected_components(pairs)
+    drop_ids = (comps.where(F.col("id") != F.col("component"))
+                .select(F.col("id").alias(id_col)))
+    return [f.join(drop_ids, id_col, "left_anti") for f in frames]
 
 
 # --------------------------------------------- incremental NEAR-dedup store
@@ -1175,7 +1047,8 @@ def incremental_near_dedup(new_df: DataFrame, store_sigs: DataFrame,
          result-identical (extra hits can only name within-batch-dropped
          ids, and the final anti-joins run against post-collapse frames)
          and it decouples the store scans from step 1 so they overlap on
-         a background thread;
+         a background thread (always joined before this returns; its
+         error is raised here, and an error in step 1 cancels it);
       3. candidate store signatures score against the broadcast batch
          signatures; batch ids with est_jaccard >= ``threshold`` to ANY
          store doc are dropped (their whole within-batch cluster already
@@ -1233,6 +1106,8 @@ def _incremental_near_dedup_impl(new_df: DataFrame, sigs_all: DataFrame,
                                  bands: int, id_col: str,
                                  cache_out: list | None,
                                  outputs: dict | None = None) -> DataFrame:
+    import uuid
+
     from pyspark import InheritableThread
 
     caches = cache_out if cache_out is not None else []
@@ -1290,28 +1165,36 @@ def _incremental_near_dedup_impl(new_df: DataFrame, sigs_all: DataFrame,
             .persist())
     caches.append(hits)
 
+    # the probe runs under its own job group so a failure on this thread
+    # can cancel it; it is ALWAYS joined before this function returns, so
+    # no store scan outlives the call (or the caches the caller releases)
+    sc = new_df.sparkSession.sparkContext
+    group = f"near-dedup-store-probe-{uuid.uuid4().hex}"
+    probe_error: list[Exception] = []
+
     def _materialize_hits():
+        sc.setJobGroup(group, "near-dedup store probe")
         try:
             hits.count()
-        except Exception:
-            pass  # surfaced by the final action that consumes `hits`
+        except Exception as e:  # re-raised on the caller's thread
+            probe_error.append(e)
 
     probe = InheritableThread(target=_materialize_hits, daemon=True)
     probe.start()
-
-    # within-batch collapse (same plan as near_dedup, sharing the banding
-    # cache) — the connected-components actions run while the store probe
-    # streams on the thread above
-    pairs = (cand0.where(F.col("est_jaccard") >= threshold)
-             .select("id_a", "id_b"))
-    comps = connected_components(pairs)  # eager (checkpointed)
-    # component IS the min member id (the connected_components contract),
-    # so the keep-representative rule is a filter, not an agg + join
-    drop_ids = (comps.where(F.col("id") != F.col("component"))
-                .select(F.col("id").alias(id_col)))
-    batch = new_df.join(drop_ids, id_col, "left_anti")
-    b_sigs = sigs_all.join(drop_ids, id_col, "left_anti")
-    probe.join()
+    try:
+        # within-batch collapse (same keep rule as near_dedup, sharing the
+        # banding cache) — the connected-components actions run while the
+        # store probe streams on the thread above
+        pairs = (cand0.where(F.col("est_jaccard") >= threshold)
+                 .select("id_a", "id_b"))
+        batch, b_sigs = _keep_representatives(pairs, id_col, new_df, sigs_all)
+    except BaseException:
+        sc.cancelJobGroup(group)
+        raise
+    finally:
+        probe.join()
+    if probe_error:
+        raise probe_error[0]
     if outputs is not None:
         # survivors' signatures SLICED from the already-computed batch
         # signature cache — the store-append frame without a second
@@ -1322,6 +1205,27 @@ def _incremental_near_dedup_impl(new_df: DataFrame, sigs_all: DataFrame,
     return batch.join(F.broadcast(hits), id_col, "left_anti")
 
 
+def _near_dedup_from_sigs(df: DataFrame, sigs: DataFrame, id_col: str,
+                          threshold: float, bands: int) -> DataFrame:
+    """The shared tail of ``near_dedup`` and ``near_dedup_tokens`` once the
+    signatures exist: persist them (banding and both sides of the
+    est_jaccard join read them), capped LSH, then the keep rule.
+    Connected components materializes the edge list eagerly, so the
+    signature/banding caches are released before this returns (or
+    raises)."""
+    sigs = sigs.persist()
+    caches = [sigs]
+    try:
+        cand = lsh_candidate_pairs(sigs, bands, id_col, cache_out=caches)
+        pairs = (cand.where(F.col("est_jaccard") >= threshold)
+                 .select("id_a", "id_b"))
+        [kept] = _keep_representatives(pairs, id_col, df)
+    finally:
+        for c in caches:
+            c.unpersist()
+    return kept
+
+
 def near_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                threshold: float = 0.8, num_hashes: int = 128, bands: int = 32,
                n: int = 3) -> DataFrame:
@@ -1329,21 +1233,9 @@ def near_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     components -> keep the min-id representative per duplicate cluster.
 
     Returns the deduplicated rows of ``df`` (all original columns)."""
-    sigs = minhash_signatures(df, text_col, n, num_hashes, id_col).persist()
-    caches = [sigs]
-    cand = minhash_dedup_pairs(df, text_col, n, num_hashes, bands, threshold,
-                               id_col, sigs=sigs, cache_out=caches)
-    pairs = cand.select("id_a", "id_b")
-    # connected_components materializes the edge list eagerly (checkpoint +
-    # per-iteration action), so the signature/banding caches can go here
-    comps = connected_components(pairs)
-    for c in caches:
-        c.unpersist()
-    # component IS the min member id (the connected_components contract),
-    # so the keep-representative rule is a filter, not an agg + join
-    drop_ids = (comps.where(F.col("id") != F.col("component"))
-                .select(F.col("id").alias(id_col)))
-    return df.join(drop_ids, on=id_col, how="left_anti")
+    return _near_dedup_from_sigs(
+        df, minhash_signatures(df, text_col, n, num_hashes, id_col),
+        id_col, threshold, bands)
 
 
 def near_dedup_tokens(df: DataFrame, tokens_col: str = "tokens",
@@ -1359,22 +1251,9 @@ def near_dedup_tokens(df: DataFrame, tokens_col: str = "tokens",
         -> keep min-id representative per duplicate cluster
 
     Returns the deduplicated rows of ``df`` (all original columns)."""
-    sigs = minhash_signatures_tokens(df, tokens_col, n, num_hashes,
-                                     id_col).persist()
-    caches = [sigs]
-    cand = lsh_candidate_pairs(sigs, bands, id_col, cache_out=caches)
-    pairs = (cand.where(F.col("est_jaccard") >= threshold)
-             .select("id_a", "id_b"))
-    # connected_components materializes the edge list eagerly (checkpoint +
-    # per-iteration action), so the signature/banding caches can go here
-    comps = connected_components(pairs)
-    for c in caches:
-        c.unpersist()
-    # component IS the min member id (the connected_components contract),
-    # so the keep-representative rule is a filter, not an agg + join
-    drop_ids = (comps.where(F.col("id") != F.col("component"))
-                .select(F.col("id").alias(id_col)))
-    return df.join(drop_ids, on=id_col, how="left_anti")
+    return _near_dedup_from_sigs(
+        df, minhash_signatures_tokens(df, tokens_col, n, num_hashes, id_col),
+        id_col, threshold, bands)
 
 
 # ------------------------------------------------- exact Jaccard (oracle)

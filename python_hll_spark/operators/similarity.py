@@ -341,14 +341,10 @@ def semdedup(df: DataFrame, n_clusters: int = 64, threshold: float = 0.95,
     member per group by centroid distance — min-id is the deterministic,
     extra-join-free equivalent).  Returns the deduplicated rows of ``df``
     (all original columns)."""
-    from python_hll_spark.operators.dedup import connected_components
+    from python_hll_spark.operators.dedup import _keep_representatives
 
     pairs = semdedup_pairs(df, n_clusters, threshold, id_col, vec_col,
                            seed, max_cluster, centroids) \
         .select("id_a", "id_b")
-    comps = connected_components(pairs)
-    # component IS the min member id (the connected_components contract),
-    # so the keep-representative rule is a filter, not an agg + join
-    drop_ids = (comps.where(F.col("id") != F.col("component"))
-                .select(F.col("id").alias(id_col)))
-    return df.join(drop_ids, on=id_col, how="left_anti")
+    [kept] = _keep_representatives(pairs, id_col, df)
+    return kept

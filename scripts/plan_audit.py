@@ -25,10 +25,14 @@ ONLY = set(sys.argv[2:])
 
 
 def main():
+    qs = entrymod.queries()
+    unmatched = sorted(ONLY - set(qs))
+    if unmatched:
+        sys.exit("plan_audit: no registered query named "
+                 + ", ".join(unmatched))
     os.makedirs(OUTDIR, exist_ok=True)
     spark = get_spark("plan-audit", master="local[4]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
     rows = []
     for name, fn in qs.items():
         if ONLY and name not in ONLY:

@@ -2,8 +2,6 @@
 bucket-cap star fallback, vectorized SimHash equivalence, and
 connected-components convergence semantics."""
 
-import warnings
-
 import numpy as np
 import pandas as pd
 import pytest
@@ -162,7 +160,8 @@ def _simhash_reference(word_hashes: list[int]) -> int:
 
 
 def test_simhash_vectorized_matches_reference(spark):
-    from python_hll_spark.operators.dedup import simhash_signatures
+    from python_hll_spark.operators.dedup import (simhash_signatures,
+                                                  tokenize_word_hashes)
 
     rng = np.random.default_rng(5)
     vocab = [f"word{i}" for i in range(300)]
@@ -171,40 +170,27 @@ def test_simhash_vectorized_matches_reference(spark):
     rows += [(1000, ""), (1001, "   "), (1002, "single")]
     df = _docs(spark, rows)
     got = {r["doc_id"]: r["simhash"]
-           for r in simhash_signatures(df, tokenizer="jvm").collect()}
-
-    # recompute expected through the same JVM xxhash64 word pipeline
-    words = F.split(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "), " ")
-    wh = df.select("doc_id",
-                   F.transform(words, lambda w: F.xxhash64(w)).alias("wh")).collect()
+           for r in simhash_signatures(df).collect()}
+    # recompute expected from the same Arrow word hashes
+    wh = tokenize_word_hashes(df).collect()
     for r in wh:
-        assert got[r["doc_id"]] == _simhash_reference(r["wh"]), r["doc_id"]
-
-    # arrow tokenizer: same kernel, murmur3 word-hash family
-    from python_hll_spark.operators.dedup import tokenize_word_hashes
-    got_a = {r["doc_id"]: r["simhash"]
-             for r in simhash_signatures(df, tokenizer="arrow").collect()}
-    wh_a = tokenize_word_hashes(df).collect()
-    for r in wh_a:
         if r["tokens"]:
-            assert got_a[r["doc_id"]] == _simhash_reference(r["tokens"]), \
+            assert got[r["doc_id"]] == _simhash_reference(r["tokens"]), \
                 r["doc_id"]
         else:
-            assert got_a[r["doc_id"]] == 0   # empty docs: zero signature
+            assert got[r["doc_id"]] == 0   # empty docs: zero signature
 
 
 # --------------------------------------- connected components convergence
-def test_connected_components_nonconvergence_warns(spark):
+def test_connected_components_nonconvergence_raises(spark):
+    """Labels that are not converged never leave connected_components: a
+    diameter-200 chain needs more than one large-star/small-star round."""
     from python_hll_spark.operators.dedup import connected_components
 
-    # path graph 0-1-2-...-12: diameter >> max_iter=2
     edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "id_a long, id_b long")
-    with pytest.warns(RuntimeWarning, match="did not converge"):
-        connected_components(edges, max_iter=2, small_cap=None).collect()
+        [(i, i + 1) for i in range(200)], "id_a long, id_b long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=2, small_cap=None,
-                             on_nonconverged="raise").collect()
+        connected_components(edges, max_iter=1, small_cap=None)
 
 
 def test_connected_components_uses_reliable_checkpoint(spark):
@@ -213,49 +199,21 @@ def test_connected_components_uses_reliable_checkpoint(spark):
     assert spark.sparkContext.getCheckpointDir() is not None
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # no non-convergence warning expected
-        comps = connected_components(edges, small_cap=None).collect()
+    comps = connected_components(edges, small_cap=None).collect()
     m = {r["id"]: r["component"] for r in comps}
     assert m == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
 def test_cc_star_converges_on_deep_chain(spark):
     """Large-star/small-star handles a diameter-200 chain in O(log d)
-    rounds — the same chain stalls min-label at max_iter=10."""
+    rounds, well inside max_iter=10."""
     from python_hll_spark.operators.dedup import connected_components
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "id_a long, id_b long")
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # star MUST converge, no warning
-        comps = connected_components(edges, max_iter=10, small_cap=None,
-                                     method="star").collect()
+    comps = connected_components(edges, max_iter=10, small_cap=None).collect()
     assert len(comps) == 201
     assert {r["component"] for r in comps} == {0}
-
-
-def test_cc_star_matches_minlabel(spark):
-    from python_hll_spark.operators.dedup import connected_components
-
-    # several clusters incl. a triangle, a pair, a chain and an isolate-pair
-    e = [(1, 2), (2, 3), (3, 1), (10, 11), (20, 21), (21, 22), (22, 23),
-         (30, 31)]
-    edges = spark.createDataFrame(e, "id_a long, id_b long")
-    star = {r["id"]: r["component"] for r in
-            connected_components(edges, method="star", small_cap=None).collect()}
-    minl = {r["id"]: r["component"] for r in
-            connected_components(edges, method="minlabel", small_cap=None).collect()}
-    assert star == minl
-    assert star[23] == 20 and star[31] == 30
-
-
-def test_cc_rejects_unknown_method(spark):
-    from python_hll_spark.operators.dedup import connected_components
-
-    edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with pytest.raises(ValueError, match="unknown method"):
-        connected_components(edges, method="bogus")
 
 
 # -------------------------------------------------- prepare_corpus metrics
@@ -383,7 +341,8 @@ def test_tokens_short_batch_large_shingle_no_crash(spark):
 # ------------------------------------- small-graph union-find fast path
 def test_cc_fast_path_matches_distributed(spark):
     """Below small_cap the driver union-find must return exactly what the
-    distributed min-label loop returns, on a messy random graph."""
+    distributed large-star/small-star path returns, on a messy random
+    graph."""
     from python_hll_spark.operators.dedup import connected_components
 
     rng = np.random.default_rng(7)
@@ -411,14 +370,14 @@ def test_cc_fast_path_string_ids_and_empty(spark):
 
 def test_cc_cap_exceeded_falls_back_to_distributed(spark):
     """small_cap smaller than the edge count must route to the distributed
-    loop — proven by the non-convergence warning a diameter-12 chain
-    triggers at max_iter=2 (the fast path would just converge)."""
+    path — proven by the non-convergence error a diameter-200 chain
+    raises at max_iter=1 (the fast path would just converge)."""
     from python_hll_spark.operators.dedup import connected_components
 
     edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "id_a long, id_b long")
-    with pytest.warns(RuntimeWarning, match="did not converge"):
-        connected_components(edges, max_iter=2, small_cap=5).collect()
+        [(i, i + 1) for i in range(200)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges, max_iter=1, small_cap=5)
 
 
 def test_keep_rule_filter_equals_agg_join(spark):

@@ -120,20 +120,32 @@ def test_minhash_arrow_tokenizer_collapses_exact_dupes(spark):
 
 
 def test_minhash_tokenizers_agree_on_est_jaccard(spark):
-    """Arrow and JVM tokenizers are different hash families but must give
-    statistically consistent Jaccard estimates on the same near-dup pair."""
+    """The text path (Arrow word tokenizer) and the pre-tokenized path
+    (integer token ids for the same words) hash different inputs but must
+    give statistically consistent Jaccard estimates on the same near-dup
+    pair, both close to the exact word 3-gram Jaccard."""
     from python_hll_spark.operators.dedup import (
-        lsh_candidate_pairs, minhash_signatures)
+        lsh_candidate_pairs, minhash_signatures, minhash_signatures_tokens)
 
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
             "lambda mu nu xi omicron pi rho sigma tau upsilon") * 3
     near = base + " phi chi"
     df = _docs(spark, [(1, base), (2, near)])
-    for tok in ("arrow", "jvm"):
-        sigs = minhash_signatures(df, num_hashes=128, n=3, tokenizer=tok)
+    vocab = {}
+    tok_rows = [(i, [vocab.setdefault(w, len(vocab)) for w in t.split()])
+                for i, t in ((1, base), (2, near))]
+    tok_df = spark.createDataFrame(tok_rows, "doc_id long, tokens array<int>")
+    grams = [{tuple(t.split()[j:j + 3]) for j in range(len(t.split()) - 2)}
+             for t in (base, near)]
+    exact = len(grams[0] & grams[1]) / len(grams[0] | grams[1])
+    for name, sigs in (
+            ("text", minhash_signatures(df, num_hashes=128, n=3)),
+            ("tokens", minhash_signatures_tokens(tok_df, num_hashes=128,
+                                                 n=3))):
         pairs = lsh_candidate_pairs(sigs, bands=32).collect()
-        assert len(pairs) == 1, tok
-        assert pairs[0]["est_jaccard"] > 0.75, (tok, pairs)
+        assert len(pairs) == 1, name
+        assert abs(pairs[0]["est_jaccard"] - exact) < 0.15, \
+            (name, pairs, exact)
 
 
 def test_simhash_arrow_tokenizer(spark):
@@ -142,12 +154,11 @@ def test_simhash_arrow_tokenizer(spark):
     df = _docs(spark, [(1, "one two three four five six seven eight"),
                        (2, "ONE two  three four five six seven eight"),
                        (3, "totally unrelated words here entirely")])
-    for tok in ("arrow", "jvm"):
-        sigs = {r["doc_id"]: r["simhash"] for r in
-                simhash_signatures(df, tokenizer=tok).collect()}
-        assert sigs[1] == sigs[2], tok
-        ham = bin((sigs[1] ^ sigs[3]) & ((1 << 64) - 1)).count("1")
-        assert ham > 10, (tok, ham)
+    sigs = {r["doc_id"]: r["simhash"] for r in
+            simhash_signatures(df).collect()}
+    assert sigs[1] == sigs[2]
+    ham = bin((sigs[1] ^ sigs[3]) & ((1 << 64) - 1)).count("1")
+    assert ham > 10, ham
 
 
 # -------------------------------------------- incremental NEAR-dedup store
@@ -252,6 +263,54 @@ def test_incremental_near_dedup_tokens(spark):
                                                 threshold=0.8, num_hashes=64,
                                                 bands=16, n=3).collect())
     assert kept == [11], kept
+    sigs.unpersist()
+
+
+def test_incremental_probe_thread_joined_on_failure(spark, monkeypatch):
+    """If the within-batch collapse raises while the store probe runs on
+    its background thread, the error reaches the caller and the probe is
+    cancelled and joined first: no probe thread (and no store scan)
+    outlives the call."""
+    import threading
+    import time
+
+    from pyspark import InheritableThread
+
+    from python_hll_spark.operators import dedup as D
+
+    rng = np.random.default_rng(3)
+    stored = rng.integers(0, 50000, 200, dtype=np.int64).tolist()
+    corpus = spark.createDataFrame([(1, stored)],
+                                   "doc_id long, tokens array<bigint>")
+    sigs = D.minhash_signatures_tokens(corpus, num_hashes=64, n=3).persist()
+    bands = D._band_keys_frame(sigs, 16)
+
+    def slow_scan(batches):
+        time.sleep(3)   # a store scan that is still running when CC fails
+        yield from batches
+
+    slow_sigs = sigs.mapInArrow(slow_scan, sigs.schema)
+    sc = spark.sparkContext
+
+    def failing_cc(pairs, *a, **k):
+        deadline = time.monotonic() + 30
+        while not sc.statusTracker().getActiveJobsIds() \
+                and time.monotonic() < deadline:
+            time.sleep(0.01)   # wait until the probe's job is running
+        raise RuntimeError("injected connected_components failure")
+
+    monkeypatch.setattr(D, "connected_components", failing_cc)
+    before = set(threading.enumerate())
+    batch = spark.createDataFrame([(10, stored), (11, stored)],
+                                  "doc_id long, tokens array<bigint>")
+    with pytest.raises(RuntimeError, match="injected"):
+        D.incremental_near_dedup_tokens(batch, slow_sigs, bands,
+                                        threshold=0.8, num_hashes=64,
+                                        bands=16, n=3)
+    alive = [t for t in threading.enumerate()
+             if t not in before and isinstance(t, InheritableThread)
+             and t.is_alive()]
+    assert alive == [], alive
     sigs.unpersist()
 
 

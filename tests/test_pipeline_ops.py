@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from python_hll_spark.functions.text import with_text_stats
 from python_hll_spark.operators.dedup import (
     dedup_exact, jaccard_word_pairs, minhash_dedup_pairs, minhash_signatures,
-    simhash_near_pairs, with_shingle_hashes,
+    simhash_near_pairs,
 )
 from python_hll_spark.operators.multimodal import (
     extract_image_features, resize_images, sample_frames,
@@ -70,8 +70,14 @@ def test_minhash_estimates_match_exact_jaccard(spark, docs_with_dupes):
     est = {(r["id_a"], r["id_b"]): r["est_jaccard"]
            for r in lsh_candidate_pairs(sigs, bands=32).collect()}
 
-    sh = with_shingle_hashes(docs_with_dupes, n=3).toPandas()
-    sets = {r.doc_id: set(r.shingles) for r in sh.itertuples()}
+    # exact reference in pure Python: sets of lowercased word 3-grams (one
+    # gram over all words for docs shorter than 3 words)
+    def grams(text):
+        w = text.lower().split()
+        return {tuple(w[i:i + 3]) for i in range(max(len(w) - 2, 1))}
+
+    sets = {r["doc_id"]: grams(r["text"])
+            for r in docs_with_dupes.select("doc_id", "text").collect()}
     for (a, b), e in est.items():
         sa, sb = sets[a], sets[b]
         exact = len(sa & sb) / len(sa | sb)
