@@ -564,7 +564,7 @@ def q_cms_top_words_by_source(spark, sf_dir):
     from python_hll_spark.sketches.cms import CMSConfig
 
     docs = _read(spark, sf_dir, "documents")
-    # four downstream consumers (CMS partials, candidates, exact counts,
+    # three downstream consumers (the cms_topk Arrow pass, exact counts,
     # group sizes): persist the exploded words instead of re-running the
     # regex+explode scan each time
     words = docs.select("source", F.explode(_norm_words(F.col("text"))).alias("w")) \

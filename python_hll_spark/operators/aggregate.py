@@ -98,6 +98,21 @@ def dict_encode_groups(batch, group_cols: list[str]):
     return codes, keys
 
 
+def split_by_group(values: np.ndarray, codes: np.ndarray,
+                   n_groups: int) -> list[np.ndarray]:
+    """Counting-sort separation of one batch's ``values`` by dense group
+    code: one stable argsort pass, then each group's values are a
+    contiguous view (a single group skips the sort).  Returns one array
+    per group code, empty when the group has no values here."""
+    if n_groups == 1:
+        return [values]
+    order = np.argsort(codes, kind="stable")
+    values = values[order]
+    bounds = np.zeros(n_groups + 1, dtype=np.int64)
+    np.cumsum(np.bincount(codes, minlength=n_groups), out=bounds[1:])
+    return [values[bounds[g]:bounds[g + 1]] for g in range(n_groups)]
+
+
 def _partial_schema(df: DataFrame, group_cols: list[str]) -> str:
     fields = [f"`{f.name}` {f.dataType.simpleString()}"
               for f in df.schema.fields if f.name in group_cols]
@@ -237,19 +252,11 @@ def token_partials_arrow(df: DataFrame, group_cols: list[str], token_col: str,
             for start in range(0, len(flat), CHUNK):
                 sl = slice(start, start + CHUNK)
                 hashed = splitmix64(flat[sl].astype(np.int64), seed=hash_seed)
-                vg = value_groups[sl]
-                # counting-sort separation: one stable argsort pass,
-                # then each group's values are a contiguous view
-                order = np.argsort(vg, kind="stable")
-                hashed = hashed[order]
-                bounds = np.zeros(n_groups + 1, dtype=np.int64)
-                np.cumsum(np.bincount(vg, minlength=n_groups), out=bounds[1:])
-                for g, key in enumerate(keys):
-                    vals = hashed[bounds[g]:bounds[g + 1]]
-                    if len(vals) == 0:
-                        continue
-                    spec.update(states[key], vals)
-                    counts[key][1] += len(vals)
+                parts = split_by_group(hashed, value_groups[sl], n_groups)
+                for key, vals in zip(keys, parts):
+                    if len(vals):
+                        spec.update(states[key], vals)
+                        counts[key][1] += len(vals)
         if not states:
             return
         keys = list(states)
@@ -346,22 +353,10 @@ def scalar_partials_arrow(df: DataFrame, group_cols: list[str], value_col: str,
             if vmask is not None:
                 values = values[vmask]
                 codes = codes[vmask]
-            if n_groups == 1:
-                key = keys[0]
-                if len(values):
-                    spec.update(states[key], values)
-                    counts[key][1] += len(values)
-                continue
-            order = np.argsort(codes, kind="stable")
-            values = values[order]
-            bounds = np.zeros(n_groups + 1, dtype=np.int64)
-            np.cumsum(np.bincount(codes, minlength=n_groups), out=bounds[1:])
-            for g, key in enumerate(keys):
-                vals = values[bounds[g]:bounds[g + 1]]
-                if len(vals) == 0:
-                    continue
-                spec.update(states[key], vals)
-                counts[key][1] += len(vals)
+            for key, vals in zip(keys, split_by_group(values, codes, n_groups)):
+                if len(vals):
+                    spec.update(states[key], vals)
+                    counts[key][1] += len(vals)
         if not states:
             return
         keys = list(states)

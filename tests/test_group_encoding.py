@@ -101,21 +101,35 @@ def test_hll_ndv_tokens_composite_groups(spark):
 
 
 def test_cms_topk_composite_groups_and_nulls(spark):
+    """Rank 2 is a tie on count between two keys whose rows are spread over
+    every input partition: the per-task partials must merge to the exact
+    count, and the tie must break on ``key`` ascending."""
+    import random
+
     from python_hll_spark.operators.topk import cms_topk, exact_topk
 
     rows = []
     for g1 in ["a", "b", None]:
         for g2 in [1, 2]:
-            # heavy key per (g1, g2) plus noise
+            # heavy key per (g1, g2), two keys tied below it, plus noise
             heavy = f"HH-{g1}-{g2}"
             rows += [(g1, g2, heavy)] * 100
+            rows += [(g1, g2, "TIE-y"), (g1, g2, "TIE-x")] * 60
             rows += [(g1, g2, f"w{i}") for i in range(30)]
+    random.Random(0).shuffle(rows)
     df = spark.createDataFrame(rows, "g1 string, g2 int, w string")
-    got = cms_topk(df, ["g1", "g2"], "w", k=1).collect()
-    assert len(got) == 6
+    assert df.rdd.getNumPartitions() > 1
+    got = cms_topk(df, ["g1", "g2"], "w", k=2).collect()
+    assert len(got) == 12
     for r in got:
-        assert r["key"] == f"HH-{r['g1']}-{r['g2']}"
-        assert r["est_count"] >= 100
+        if r["rank"] == 1:
+            assert r["key"] == f"HH-{r['g1']}-{r['g2']}"
+            assert r["est_count"] >= 100
+    # collision-free input: estimates equal the exact counts
+    exact = exact_topk(df, ["g1", "g2"], "w", k=2).collect()
+    assert ({(r["g1"], r["g2"], r["key"], r["rank"], r["est_count"]) for r in got}
+            == {(r["g1"], r["g2"], r["key"], r["rank"], r["cnt"]) for r in exact})
+    assert {r["key"] for r in got if r["rank"] == 2} == {"TIE-x"}
 
 
 def test_cms_topk_shared_cms_matches_per_group(spark):

@@ -297,3 +297,24 @@ def test_strip_spans_plan_text_never_shuffles(spark):
         {"doc_id", "__g"}, m
     assert "partial_count" in plan
     _assert_text_scan_feeds_broadcast_join(plan)
+
+
+@pytest.mark.parametrize("shared_cms", [False, True])
+def test_cms_topk_one_arrow_pass_one_shuffle(spark, shared_cms):
+    """cms_topk's raw rows cross the Python boundary once (one MapInArrow
+    builds both the CMS partials and the candidates) and are never
+    shuffled; one grouped Arrow reducer estimates the candidates, with no
+    pandas stage and no broadcast of sketch states."""
+    from pyspark.sql import functions as F
+    from python_hll_spark.operators.topk import cms_topk
+
+    df = spark.range(0, 2000, 1, 4).select((F.col("id") % 5).alias("g"),
+                                           (F.col("id") % 97).alias("w"))
+    plan = _plan(cms_topk(df, ["g"], "w", k=3, shared_cms=shared_cms))
+    assert plan.count("MapInArrow") == 1, plan
+    assert plan.count("FlatMapGroupsInArrow") == 1, plan
+    for node in ("MapInPandas", "FlatMapGroupsInPandas", "BroadcastExchange"):
+        assert node not in plan, plan
+    assert "Exchange" not in plan.split("MapInArrow")[-1], plan
+    # one shuffle of partial and candidate rows feeds the reducer
+    assert plan.split("FlatMapGroupsInArrow")[-1].count("Exchange") == 1, plan

@@ -97,21 +97,39 @@ def test_cms_topk_late_surging_heavy_hitter(spark):
     df = (spark.createDataFrame(rows, "seq long, grp string, key string")
           .repartition(1).sortWithinPartitions("seq"))
 
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsInBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsInBatch", "2080")
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2080")
     try:
         from python_hll_spark.operators.topk import cms_topk
         got = cms_topk(df, ["grp"], "key", k=1,
                        candidates_per_task=4).collect()
     finally:
         if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsInBatch")
+            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
         else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsInBatch", old)
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert len(got) == 1
     assert got[0]["key"] == "HEAVY", got
     # est_count comes from the CMS: true count, not the inflated admission
     assert 800 <= got[0]["est_count"] <= 800 + int(2.72 / 65536 * 21000) + 1
+
+
+def test_cms_topk_build_launches_no_job(spark):
+    """Building the cms_topk DataFrame is lazy: no job runs until an
+    action, so the plan can be composed and shares one lineage."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame([("g", f"w{i % 7}") for i in range(200)],
+                               "g string, w string")
+    group = "cms-topk-build-no-job"
+    sc.setJobGroup(group, "cms_topk build")
+    try:
+        out = cms_topk(df, ["g"], "w", k=2)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        got = out.collect()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert [(r["key"], r["est_count"]) for r in got] == [("w0", 29), ("w1", 29)]
 
 
 # ----------------------------------------------- pairwise overlap matrix
